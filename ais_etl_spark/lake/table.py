@@ -17,9 +17,12 @@ Iceberg semantics, from scratch, sized for the 10^10-event design point:
   disjoint and a hot key's write amplification is one FILE, not one
   bucket. At 100 TB with 1024 buckets a batch touching 1% of keys
   rewrites ~1% of the table's files, not the table.
-- **Atomic commit = POSIX rename** of the manifest JSON into
-  ``_commits/`` (write-tmp-then-rename; rename is atomic on one
-  filesystem). The reference's analog is the versioned result cache
+- **Atomic commit = put-if-absent hard link** of the manifest JSON
+  into ``_commits/`` (write tmp, fsync, ``os.link`` to
+  ``vNNN.json``). A link never replaces its target, so of two writers
+  that planned the same snapshot id exactly one publishes and the
+  other fails with ``EEXIST`` — a rename would silently replace the
+  winner. The reference's analog is the versioned result cache
   with atomic refresh (/root/reference/transformers/tar2tf/src/
   cached.go:122-195); Iceberg's is the catalog snapshot swap.
 - **Exactly-once** = the commit carries ``batch_id``; a merge whose
@@ -45,15 +48,21 @@ Iceberg semantics, from scratch, sized for the 10^10-event design point:
   audio_manager's processed/error counters,
   /root/reference/NeMo/.../audio_manager/fastapi_server.py:197-206).
 
-Concurrency model: single writer (one streaming query / one driver),
-many readers — Iceberg's default practical deployment. Readers always
+Concurrency model: one writer at a time per table is the supported
+deployment (one streaming query / one driver), with many readers.
+A second writer is detected, not merged: every snapshot is built as a
+child of the head it planned against (:meth:`LakeTable._child_commit`)
+and published put-if-absent, so a writer whose snapshot id was taken
+meanwhile raises instead of replacing the other commit. Readers always
 see a complete snapshot because the manifest is the commit point.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import time
 import uuid
 from dataclasses import dataclass
 
@@ -87,6 +96,31 @@ _MANIFEST_DELTA_CAP = 32
 # small JSONs) — correctness is unaffected.
 _COMMIT_CACHE_CAP = 128
 
+# table-state fields every child snapshot inherits from its base commit
+_CARRIED = ("schema_version", "schemas", "key", "order_col", "n_buckets")
+
+
+def write_json_atomic(path: str, obj, replace: bool = True) -> None:
+    """Write ``obj`` as JSON to ``path`` all-or-nothing: a tmp file in
+    the same directory, fsynced, then renamed over ``path``. With
+    ``replace=False`` the tmp file is hard-linked to ``path`` instead —
+    put-if-absent: a link never replaces an existing target, so this
+    raises ``FileExistsError`` and leaves the existing file intact."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+            f.flush()
+            os.fsync(f.fileno())
+        if replace:
+            os.replace(tmp, path)
+        else:
+            os.link(tmp, path)
+    finally:
+        # gone after a replace; the link's source, or a failed write
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+
 
 @dataclass
 class Column:
@@ -103,10 +137,6 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self._commit_cache: dict[int, dict] = {}
-        # write-audit-publish: while set, the merge pipeline parks its
-        # commit + lineage in _staged_capture instead of publishing
-        self._stage_to: str | None = None
-        self._staged_capture: dict | None = None
 
     # ------------------------------------------------------------------
     # creation / loading
@@ -161,6 +191,7 @@ class LakeTable:
             "files": [],
             "batches": [],
             "lineage": {},
+            "committed_at": time.time(),
         }
         t = cls(spark, path)
         t._write_commit(commit)
@@ -204,11 +235,15 @@ class LakeTable:
             return snap
         if not os.path.isdir(d):
             return None
-        snaps = [
-            int(f[1:-5]) for f in os.listdir(d)
+        snaps = self._snapshot_ids()
+        return snaps[-1] if snaps else None
+
+    def _snapshot_ids(self) -> list[int]:
+        """Every retained snapshot id, ascending (a directory listing)."""
+        return sorted(
+            int(f[1:-5]) for f in os.listdir(os.path.join(self.path, _COMMITS))
             if f.startswith("v") and f.endswith(".json")
-        ]
-        return max(snaps) if snaps else None
+        )
 
     def commit(self, snapshot_id: int | None = None) -> dict:
         snap = self.current_snapshot_id() if snapshot_id is None else snapshot_id
@@ -265,12 +300,9 @@ class LakeTable:
         than ``_MANIFEST_DELTA_CAP`` (bounds the reconstruction walk);
         whole-table rewrites (rebucket/compact-all) fail the size test
         and naturally re-anchor the chain with a full manifest."""
-        # expired_parent marks a re-rooted checkpoint commit only; a
-        # child built by spreading its parent dict must not inherit it
         base = {
             k: v for k, v in commit.items()
-            if k not in ("files", "files_added", "files_removed",
-                         "manifest_chain", "expired_parent")
+            if k not in ("files", "manifest_chain")
         }
         files = commit["files"]
         pid = commit.get("parent")
@@ -304,33 +336,54 @@ class LakeTable:
                     return enc
         return {**base, "manifest_chain": 0, "files": files}
 
+    def _child_commit(
+        self, head: dict, operation: str, base: dict | None = None,
+        batch_id: str | None = None, **fields,
+    ) -> tuple[dict, str]:
+        """The one place a new snapshot is built: the child of ``head``
+        (the commit the op planned against — NOT a re-read of the log,
+        so a writer that lost the race to another fails at publish
+        instead of silently rebasing onto a head it never saw) with a
+        fresh ``committed_at``. Table state is carried from ``base``
+        (default ``head``; rollback passes its target), ``batch_id``
+        is appended to the exactly-once fence list, and ``fields``
+        override whatever the op changes. Returns the commit and the
+        data directory (relative) allocated to it; ops that write data
+        fill in ``files``/``lineage`` once it is written."""
+        base = head if base is None else base
+        snap = head["snapshot_id"] + 1
+        commit = {
+            **{k: base[k] for k in _CARRIED},
+            "max_file_rows": base.get("max_file_rows", 1 << 20),
+            "snapshot_id": snap,
+            "parent": head["snapshot_id"],
+            "batch_id": batch_id,
+            "operation": operation,
+            "files": base["files"],
+            "batches": list(base.get("batches", []))
+            + ([batch_id] if batch_id is not None else []),
+            "lineage": {},
+            "hwm_us": base.get("hwm_us"),
+            "applied_fences": base.get("applied_fences", []),
+            "committed_at": time.time(),
+            **fields,
+        }
+        return commit, f"{_DATA}/snap{snap:012d}"
+
     def _write_commit(self, commit: dict) -> None:
-        """Atomic publish: tmp file + rename. os.rename fails if we ever
-        raced another writer to the same snapshot id only on systems
-        where the target exists check matters; single-writer is the
-        documented contract (see module docstring)."""
-        if self._stage_to is not None:
-            # write-audit-publish: park the full commit dict in memory;
-            # stage_merge persists it to the staged file (with the
-            # lineage offsets captured below) once the pipeline is done
-            self._staged_capture = {"commit": commit, "offsets": []}
-            return
-        final = self._commit_path(commit["snapshot_id"])
-        if os.path.exists(final):
+        """Atomic put-if-absent publish (see the module docstring): a
+        snapshot id that is already taken — another writer published
+        the same child first — raises and leaves that commit intact."""
+        enc = self._encode_manifest(commit)
+        try:
+            write_json_atomic(
+                self._commit_path(commit["snapshot_id"]), enc, replace=False
+            )
+        except FileExistsError:
             raise RuntimeError(
                 f"snapshot {commit['snapshot_id']} already committed "
                 f"(concurrent writer?)"
-            )
-        import time
-
-        commit.setdefault("committed_at", time.time())
-        enc = self._encode_manifest(commit)
-        tmp = os.path.join(self.path, _COMMITS, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(enc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, final)
+            ) from None
         # head-pointer hint (no fsync: staleness is healed by the
         # reader's forward probe, torn content by the int() fallback)
         lt = os.path.join(self.path, _COMMITS, f".tmp-latest-{uuid.uuid4().hex}")
@@ -340,9 +393,6 @@ class LakeTable:
         # cache the FULL form; carry the chain length so the next
         # commit's encoder sees it without a disk round-trip
         commit["manifest_chain"] = enc["manifest_chain"]
-        commit.pop("files_added", None)
-        commit.pop("files_removed", None)
-        commit.pop("expired_parent", None)
         self._cache_put(commit["snapshot_id"], commit)
 
     def committed_batch_ids(self) -> set[str]:
@@ -368,7 +418,7 @@ class LakeTable:
         ``fence_id`` (the DDL event's fence_event_id) is recorded in the
         commit's ``applied_fences`` set so crash-replay of the same DDL
         stream is exactly-once by id, independent of schema shape."""
-        c = dict(self.commit())
+        c = self.commit()
         cols = [dict(x) for x in self.schema_cols(c)]
         if any(x["name"] == name for x in cols):
             raise ValueError(f"column {name!r} exists")
@@ -385,7 +435,7 @@ class LakeTable:
         self, old: str, new: str, fence_id: int | None = None
     ) -> int:
         """Metadata-only RENAME COLUMN (same column id, new name)."""
-        c = dict(self.commit())
+        c = self.commit()
         cols = [dict(x) for x in self.schema_cols(c)]
         if any(x["name"] == new for x in cols):
             raise ValueError(f"column {new!r} exists")
@@ -417,7 +467,7 @@ class LakeTable:
         the schema-version mapping; non-widening changes are rejected
         (they would need a rewrite). decimal(p,s)→decimal(p',s) with
         p' ≥ p is also accepted (same scale, more precision)."""
-        c = dict(self.commit())
+        c = self.commit()
         cols = [dict(x) for x in self.schema_cols(c)]
         hit = [x for x in cols if x["name"] == name]
         if not hit:
@@ -445,7 +495,7 @@ class LakeTable:
         column ids, so time travel to pre-drop snapshots still sees it
         and a later re-add gets a FRESH id (never resurrects old
         values)."""
-        c = dict(self.commit())
+        c = self.commit()
         cols = [dict(x) for x in self.schema_cols(c)]
         if name in (c["key"], c["order_col"]):
             raise ValueError(f"cannot drop key/order column {name!r}")
@@ -455,25 +505,21 @@ class LakeTable:
         return self._commit_schema_change(c, keep, f"drop_column:{name}", fence_id)
 
     def _commit_schema_change(
-        self, parent: dict, cols: list[dict], op: str,
+        self, head: dict, cols: list[dict], op: str,
         fence_id: int | None = None,
     ) -> int:
-        commit = dict(parent)
-        commit["parent"] = parent["snapshot_id"]
-        commit["snapshot_id"] = parent["snapshot_id"] + 1
-        commit["operation"] = op
-        commit["schemas"] = list(parent["schemas"]) + [cols]
-        commit["schema_version"] = len(commit["schemas"]) - 1
-        commit["batch_id"] = None
-        commit["lineage"] = {}
+        schemas = list(head["schemas"]) + [cols]
+        fences = head.get("applied_fences", [])
         if fence_id is not None:
             # durable DDL fence set (the binlog-GTID analog): replay
             # idempotency is decided by fence id, never by inferring
             # "already applied" from the current schema shape — which
             # is ambiguous once a rename follows an add/widen chain
-            commit["applied_fences"] = sorted(
-                set(parent.get("applied_fences", [])) | {int(fence_id)}
-            )
+            fences = sorted(set(fences) | {int(fence_id)})
+        commit, _ = self._child_commit(
+            head, op, schemas=schemas, schema_version=len(schemas) - 1,
+            applied_fences=fences,
+        )
         self._write_commit(commit)
         return commit["snapshot_id"]
 
@@ -727,27 +773,15 @@ class LakeTable:
         the target become re-appliable — their exactly-once fence rolls
         back WITH the data they wrote, so a corrected re-merge keeps
         replay equality instead of being swallowed as a duplicate."""
-        target = self.commit(snapshot_id)
-        cur = self.commit()
-        commit = {
-            **{k: target[k] for k in ("schema_version", "schemas", "key",
-                                      "order_col", "n_buckets")},
-            "max_file_rows": target.get("max_file_rows", 1 << 20),
-            "snapshot_id": cur["snapshot_id"] + 1,
-            "parent": cur["snapshot_id"],
-            "batch_id": None,
-            "operation": f"rollback:{snapshot_id}",
-            "files": target["files"],
-            "batches": list(target.get("batches", [])),
-            "lineage": {"rolled_back_to": snapshot_id},
-            # the event-time high-water mark rolls back WITH the data,
-            # so re-merged corrected batches face the same lateness
-            # cutoff they originally did
-            "hwm_us": target.get("hwm_us"),
-            # DDL fences roll back with the schema they gated, so a
-            # corrected DDL replay re-applies coherently
-            "applied_fences": target.get("applied_fences", []),
-        }
+        # the target is the base: files, schema state, batch fences, the
+        # event-time high-water mark (re-merged corrected batches face
+        # the lateness cutoff they originally did) and DDL fences (a
+        # corrected DDL replay re-applies coherently) all roll back
+        commit, _ = self._child_commit(
+            self.commit(), f"rollback:{snapshot_id}",
+            base=self.commit(snapshot_id),
+            lineage={"rolled_back_to": snapshot_id},
+        )
         self._write_commit(commit)
         return commit["snapshot_id"]
 
@@ -757,13 +791,8 @@ class LakeTable:
         operation, batch id, schema version, file count, and the merge
         counters. Driver-side from the commit JSONs — bounded by the
         retained snapshot count (expire_snapshots caps it)."""
-        d = os.path.join(self.path, _COMMITS)
-        snaps = sorted(
-            int(f[1:-5]) for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")
-        )
         rows = []
-        for s in snaps:
+        for s in self._snapshot_ids():
             c = self.commit(s)
             ln = c.get("lineage") or {}
             rows.append(
@@ -943,7 +972,7 @@ class LakeTable:
                 f"pass replace=True to move it"
             )
         t[name] = int(snap)
-        self._write_tags(t)
+        write_json_atomic(self._tags_path(), t)
         return int(snap)
 
     def untag(self, name: str) -> bool:
@@ -951,16 +980,8 @@ class LakeTable:
         if name not in t:
             return False
         del t[name]
-        self._write_tags(t)
+        write_json_atomic(self._tags_path(), t)
         return True
-
-    def _write_tags(self, t: dict[str, int]) -> None:
-        tmp = os.path.join(self.path, _COMMITS, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(t, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._tags_path())
 
     def resolve_ref(self, ref) -> int:
         """Tag name or snapshot id → snapshot id."""
@@ -979,12 +1000,7 @@ class LakeTable:
         return os.path.join(self.path, _COMMITS, f"staged-{batch_id}.json")
 
     def _staged_data_dir(self, batch_id: str) -> str:
-        return os.path.join(self.path, _DATA, f"staged-{batch_id}")
-
-    def _merge_rel_dir(self, snap_id: int) -> str:
-        if self._stage_to is not None:
-            return f"{_DATA}/staged-{self._stage_to}"
-        return f"{_DATA}/snap{snap_id:012d}"
+        return f"{_DATA}/staged-{batch_id}"
 
     def stage_merge(self, events: DataFrame, batch_id: str, **merge_kwargs) -> dict:
         """Write-audit-publish step 1 (WRITE): run the FULL merge
@@ -1011,25 +1027,18 @@ class LakeTable:
         # not move files), so the unconditional discard below would
         # rmtree live committed data on a replay of a committed batch
         # id (e.g. a streaming restart re-staging its last epoch)
-        if batch_id in self.committed_batch_ids():
+        c = self.commit()
+        if batch_id in c.get("batches", []):
             return {}
         self.discard_staged(batch_id)  # replace any earlier attempt
-        self._stage_to = batch_id
-        self._staged_capture = None
-        try:
-            lineage = self.merge(events, batch_id, **merge_kwargs)
-        finally:
-            self._stage_to = None
-        if self._staged_capture is None:
-            return lineage  # already-committed fence: nothing staged
-        tmp = os.path.join(self.path, _COMMITS, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(self._staged_capture, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._staged_path(batch_id))
-        self._staged_capture = None
-        return lineage
+        commit, offsets = self._prepare_merge(
+            c, events, batch_id, self._staged_data_dir(batch_id),
+            **merge_kwargs,
+        )
+        write_json_atomic(
+            self._staged_path(batch_id), {"commit": commit, "offsets": offsets}
+        )
+        return commit["lineage"]
 
     def _load_staged(self, batch_id: str) -> dict:
         try:
@@ -1066,11 +1075,9 @@ class LakeTable:
                 f"{commit.get('parent')} but the head is now {head}; "
                 f"restage against the current head"
             )
-        self._write_commit(commit)
-        if commit.get("lineage"):
-            self._append_lineage(commit["lineage"], offsets)
+        lineage = self._publish(commit, offsets)
         os.remove(self._staged_path(batch_id))
-        return commit.get("lineage", {})
+        return lineage
 
     def discard_staged(self, batch_id: str) -> bool:
         """Drop a staged batch: remove its commit marker and its data
@@ -1091,7 +1098,7 @@ class LakeTable:
         if os.path.exists(p):
             os.remove(p)
             removed = True
-        d = self._staged_data_dir(batch_id)
+        d = os.path.join(self.path, self._staged_data_dir(batch_id))
         if os.path.isdir(d):
             _sh.rmtree(d, ignore_errors=True)
             removed = True
@@ -1179,11 +1186,34 @@ class LakeTable:
         Physical plan (mor): dedup batch → transform winners → write
         winners as per-bucket delta files — one shuffle, zero base IO.
         """
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
         c = self.commit()
         if batch_id in c.get("batches", []):
             return {}  # exactly-once replay: already applied
+        return self._publish(*self._prepare_merge(
+            c, events, batch_id, None, post_dedup_transform,
+            exact_probe_files, bounded_lateness_us, mode,
+        ))
+
+    def _publish(self, commit: dict, offsets: list[dict]) -> dict:
+        """Publish tail shared by ``merge`` and ``publish_staged``:
+        commit the snapshot, then append its lineage rows."""
+        self._write_commit(commit)
+        self._append_lineage(commit["lineage"], offsets)
+        return commit["lineage"]
+
+    def _prepare_merge(
+        self, c: dict, events: DataFrame, batch_id: str,
+        data_dir: str | None, post_dedup_transform=None,
+        exact_probe_files: int = 64, bounded_lateness_us: int | None = None,
+        mode: str = "cow",
+    ) -> tuple[dict, list[dict]]:
+        """Everything ``merge`` does short of publishing: quarantine,
+        dedup, transform and data write against head ``c``. Data files
+        go under ``data_dir`` (None = the child snapshot's own
+        directory). Returns the unpublished child commit and the
+        per-source-partition offsets its lineage rows need."""
+        if mode not in ("cow", "mor"):
+            raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
         key = c["key"]
         order_col = c["order_col"]
         cur_cols = self.schema_cols(c)
@@ -1263,10 +1293,11 @@ class LakeTable:
             ev, key=key, order_cols=(order_col, _SEQ),
             payload_cols=["op", *payload_in],
         )
-        return self._merge_winners(
-            c, winners, batch_id, touched, hit_paths, post_dedup_transform,
-            offsets, malformed, n_late, hwm_us, mode=mode,
+        commit = self._merge_winners(
+            c, winners, batch_id, data_dir, touched, hit_paths,
+            post_dedup_transform, offsets, malformed, n_late, hwm_us, mode,
         )
+        return commit, offsets
 
     def _batch_stats(self, events: DataFrame, key: str, c: dict, bad,
                      exact_probe_files: int = 64, late=None,
@@ -1460,8 +1491,8 @@ class LakeTable:
         )
 
     def _merge_winners(
-        self, c, winners, batch_id, touched, hit_paths, post_dedup_transform,
-        offsets, malformed: int = 0, n_late: int = 0,
+        self, c, winners, batch_id, data_dir, touched, hit_paths,
+        post_dedup_transform, offsets, malformed: int = 0, n_late: int = 0,
         hwm_us: int | None = None, mode: str = "cow",
     ) -> dict:
         key = c["key"]
@@ -1492,10 +1523,16 @@ class LakeTable:
             self._bucket_expr(F.col(key)).alias("_bucket"),
         )
 
+        # hwm_us already folds in the parent's mark (merge takes the max)
+        commit, snap_dir = self._child_commit(
+            c, "merge-mor" if mode == "mor" else "merge",
+            batch_id=batch_id, hwm_us=hwm_us,
+        )
+        rel_dir = data_dir or snap_dir
         if mode == "mor":
-            return self._commit_mor_deltas(
-                c, incoming, batch_id, touched, offsets, malformed,
-                n_late, hwm_us,
+            return self._write_mor_deltas(
+                c, commit, incoming, rel_dir, touched, offsets, malformed,
+                n_late,
             )
 
         # 3. current rows in HIT FILES only (file-granularity CoW:
@@ -1580,8 +1617,6 @@ class LakeTable:
             ).alias("stale_noops"),
             F.count("*").alias("rows_after"),
         )
-        snap_id = c["snapshot_id"] + 1
-        rel_dir = self._merge_rel_dir(snap_id)
         ordered = [col["name"] for col in cur_cols]
         new_files = self._write_data(
             observed.select(*ordered, _SEQ, _DELETED, "_bucket"),
@@ -1605,9 +1640,10 @@ class LakeTable:
                        "rows_after")}
 
         carry = [f for f in c["files"] if f["path"] not in hit_paths]
-        lineage = {
+        commit["files"] = carry + new_files
+        commit["lineage"] = {
             "batch_id": batch_id,
-            "snapshot_id": snap_id,
+            "snapshot_id": commit["snapshot_id"],
             "buckets_rewritten": len({f["bucket"] for f in new_files}),
             "buckets_total": c["n_buckets"],
             "files_rewritten": len(rewrite_entries),
@@ -1618,33 +1654,15 @@ class LakeTable:
             "late_events": int(n_late),
             **{k: int(v or 0) for k, v in counts.items()},
         }
-        commit = {
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": batch_id,
-            "operation": "merge",
-            "schema_version": c["schema_version"],
-            "schemas": c["schemas"],
-            "key": key,
-            "order_col": order_col,
-            "n_buckets": c["n_buckets"],
-            "max_file_rows": c.get("max_file_rows", 1 << 20),
-            "files": carry + new_files,
-            "batches": list(c.get("batches", [])) + [batch_id],
-            "lineage": lineage,
-            "hwm_us": hwm_us if hwm_us is not None else c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
-        self._write_commit(commit)
-        self._append_lineage(lineage, offsets)
-        return lineage
+        return commit
 
-    def _commit_mor_deltas(
-        self, c, incoming, batch_id, touched, offsets, malformed, n_late,
-        hwm_us,
+    def _write_mor_deltas(
+        self, c, commit, incoming, rel_dir, touched, offsets, malformed,
+        n_late,
     ) -> dict:
-        """Merge-on-read commit: append the batch winners (tombstones
-        included) as per-bucket DELTA files — no base file is read or
+        """Merge-on-read write: append the batch winners (tombstones
+        included) as per-bucket DELTA files under ``rel_dir`` and fill
+        in ``commit``'s files and lineage — no base file is read or
         rewritten, so write IO scales with the batch alone. Readers
         resolve base+delta per key (``_resolve_lww``); ``compact()``
         folds deltas back into base files. The insert/update/stale
@@ -1653,7 +1671,8 @@ class LakeTable:
         and NULLs for the CoW-only counters."""
         from pyspark.sql import Observation
 
-        snap_id = c["snapshot_id"] + 1
+        snap_id = commit["snapshot_id"]
+        batch_id = commit["batch_id"]
         cur_cols = self.schema_cols(c)
         ordered = [col["name"] for col in cur_cols]
 
@@ -1665,8 +1684,7 @@ class LakeTable:
         )
         new_files = self._write_data(
             observed.select(*ordered, _SEQ, _DELETED, "_bucket"),
-            c, self._merge_rel_dir(snap_id),
-            n_parts=max(len(touched), 1), kind="delta", seq=snap_id,
+            c, rel_dir, n_parts=max(len(touched), 1), kind="delta", seq=snap_id,
         )
         try:
             counts = obs.get
@@ -1679,7 +1697,8 @@ class LakeTable:
             if any(f.get("n_rows") for f in new_files):
                 raise
             counts = {}
-        lineage = {
+        commit["files"] = list(c["files"]) + new_files
+        commit["lineage"] = {
             "batch_id": batch_id,
             "snapshot_id": snap_id,
             "mode": "mor",
@@ -1698,26 +1717,7 @@ class LakeTable:
             "deletes": None,
             "stale_noops": None,
         }
-        commit = {
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": batch_id,
-            "operation": "merge-mor",
-            "schema_version": c["schema_version"],
-            "schemas": c["schemas"],
-            "key": c["key"],
-            "order_col": c["order_col"],
-            "n_buckets": c["n_buckets"],
-            "max_file_rows": c.get("max_file_rows", 1 << 20),
-            "files": list(c["files"]) + new_files,
-            "batches": list(c.get("batches", [])) + [batch_id],
-            "lineage": lineage,
-            "hwm_us": hwm_us if hwm_us is not None else c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
-        self._write_commit(commit)
-        self._append_lineage(lineage, offsets)
-        return lineage
+        return commit
 
     # ------------------------------------------------------------------
     # data-file writer (shared by merge + gc)
@@ -1845,19 +1845,9 @@ class LakeTable:
         c = self.commit(snap)  # reconstructs through ancestors if delta
         if c.get("parent") is None and int(c.get("manifest_chain", 0)) == 0:
             return
-        full = {
-            k: v for k, v in c.items()
-            if k not in ("files_added", "files_removed", "manifest_chain")
-        }
-        full["expired_parent"] = full.get("parent")
-        full["parent"] = None
-        full["manifest_chain"] = 0
-        tmp = os.path.join(self.path, _COMMITS, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(full, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._commit_path(snap))
+        full = {**c, "expired_parent": c.get("parent"), "parent": None,
+                "manifest_chain": 0}
+        write_json_atomic(self._commit_path(snap), full)
         self._cache_put(snap, full)
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
@@ -1871,11 +1861,7 @@ class LakeTable:
         {snapshots_removed, dirs_removed}."""
         import shutil
 
-        d = os.path.join(self.path, _COMMITS)
-        snaps = sorted(
-            int(f[1:-5]) for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        snaps = self._snapshot_ids()
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         tagged = set(self.tags().values())
@@ -1960,8 +1946,7 @@ class LakeTable:
         kept = cur.observe(
             obs, F.sum(expired.cast("long")).alias("dropped")
         ).filter(~expired)
-        snap_id = c["snapshot_id"] + 1
-        rel_dir = f"{_DATA}/snap{snap_id:012d}"
+        commit, rel_dir = self._child_commit(c, "gc_tombstones")
         new_files = self._write_data(
             kept, c, rel_dir, n_parts=max(len({f['bucket'] for f in hit}), 1)
         )
@@ -1973,19 +1958,8 @@ class LakeTable:
             # unevaluated — recount the expired winners directly (rare
             # path, one extra scan of the already-pruned hit set)
             dropped = cur.filter(expired).count()
-        commit = {
-            **{k: c[k] for k in ("schema_version", "schemas", "key", "order_col",
-                                 "n_buckets", "max_file_rows")},
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": None,
-            "operation": "gc_tombstones",
-            "files": carry + new_files,
-            "batches": list(c.get("batches", [])),
-            "lineage": {"rows_dropped": dropped},
-            "hwm_us": c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
+        commit["files"] = carry + new_files
+        commit["lineage"] = {"rows_dropped": dropped}
         self._write_commit(commit)
         return {"files_rewritten": len(hit), "files_carried": len(carry),
                 "rows_dropped": dropped}
@@ -2208,24 +2182,12 @@ class LakeTable:
         rows = self._resolved_entries_df(c, hit).withColumn(
             "_bucket", self._bucket_expr(F.col(c["key"]))
         )
-        snap_id = c["snapshot_id"] + 1
+        commit, rel_dir = self._child_commit(c, "compact")
         new_files = self._write_data(
-            rows, c, f"{_DATA}/snap{snap_id:012d}",
-            n_parts=max(len({f['bucket'] for f in hit}), 1),
+            rows, c, rel_dir, n_parts=max(len({f['bucket'] for f in hit}), 1),
         )
-        commit = {
-            **{k: c[k] for k in ("schema_version", "schemas", "key", "order_col",
-                                 "n_buckets", "max_file_rows")},
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": None,
-            "operation": "compact",
-            "files": carry + new_files,
-            "batches": list(c.get("batches", [])),
-            "lineage": {"files_before": len(hit), "files_after": len(new_files)},
-            "hwm_us": c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
+        commit["files"] = carry + new_files
+        commit["lineage"] = {"files_before": len(hit), "files_after": len(new_files)}
         self._write_commit(commit)
         return {"files_before": len(hit) + len(carry),
                 "files_after": len(new_files) + len(carry)}
@@ -2258,25 +2220,13 @@ class LakeTable:
             "_bucket",
             F.pmod(F.xxhash64(F.col(c["key"])), F.lit(n_buckets)).cast("int"),
         )
-        snap_id = c["snapshot_id"] + 1
-        new_files = self._write_data(
-            rows, c, f"{_DATA}/snap{snap_id:012d}", n_parts=n_buckets
+        commit, rel_dir = self._child_commit(
+            c, f"rebucket:{c['n_buckets']}->{n_buckets}", n_buckets=n_buckets
         )
-        commit = {
-            **{k: c[k] for k in ("schema_version", "schemas", "key",
-                                 "order_col", "max_file_rows")},
-            "n_buckets": n_buckets,
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": None,
-            "operation": f"rebucket:{c['n_buckets']}->{n_buckets}",
-            "files": new_files,
-            "batches": list(c.get("batches", [])),
-            "lineage": {"files_before": len(c["files"]),
-                        "files_after": len(new_files)},
-            "hwm_us": c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
+        new_files = self._write_data(rows, c, rel_dir, n_parts=n_buckets)
+        commit["files"] = new_files
+        commit["lineage"] = {"files_before": len(c["files"]),
+                             "files_after": len(new_files)}
         self._write_commit(commit)
         return {"files_before": len(c["files"]),
                 "files_after": len(new_files), "n_buckets": n_buckets}
@@ -2430,12 +2380,6 @@ class LakeTable:
     # ------------------------------------------------------------------
 
     def _append_lineage(self, lineage: dict, offsets: list[dict]) -> None:
-        if self._stage_to is not None and self._staged_capture is not None:
-            # write-audit-publish: lineage rows become durable only at
-            # publish time (a discarded staged batch never ran, as far
-            # as the metrics table is concerned)
-            self._staged_capture["offsets"] = offsets or []
-            return
         rows = [
             {
                 "batch_id": lineage["batch_id"],

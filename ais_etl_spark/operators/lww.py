@@ -21,9 +21,6 @@ Physical strategy (the 100 TB story):
   testing: it is the textbook formulation but does a full sort-shuffle
   with no partial aggregation — the hot key lands on one reducer. Used
   only as a semantic cross-check at test scale.
-- ``lww_salted`` demonstrates the explicit two-phase salt/unsalt
-  pattern for engines whose aggregate lacks a combiner; with Spark's
-  hash-agg it is redundant but benchmarked to prove it.
 """
 
 from __future__ import annotations
@@ -74,26 +71,3 @@ def lww_window(
         .drop("_rn")
     )
 
-
-def lww_salted(
-    df: DataFrame,
-    key: str = "url",
-    order_cols: tuple[str, ...] = ORDER_COLS,
-    n_salt: int = 16,
-) -> DataFrame:
-    """Explicit two-phase skew pattern: local LWW per (key, salt), then
-    global LWW per key. salt = pmod(xxhash64(event_id), n_salt) spreads
-    a hot key over n_salt reducers in phase 1."""
-    payload_cols = [c for c in df.columns if c != key and c not in order_cols]
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(n_salt)))
-    # phase 1: combine within (key, salt)
-    w1 = F.max(
-        F.struct(*[F.col(c) for c in order_cols], *[F.col(c) for c in payload_cols])
-    ).alias("w")
-    p1 = salted.groupBy(key, "_salt").agg(w1).select(
-        key,
-        *[F.col(f"w.{c}").alias(c) for c in order_cols],
-        *[F.col(f"w.{c}").alias(c) for c in payload_cols],
-    )
-    # phase 2: combine across salts (tiny: n_salt rows per hot key)
-    return lww_latest(p1, key=key, order_cols=order_cols, payload_cols=payload_cols)

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import hashlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,20 +38,31 @@ def test_shingles_match_python(docs):
         assert r["s"] == want
 
 
-def test_minhash_explode_vs_udf_parity(docs):
-    """The built-in explode formulation and the Arrow-batched scale UDF
-    must produce identical signatures."""
-    exploded = D.minhash_signatures(docs, k=8).collect()
+def _py_minhash(text: str, k: int, shingle_n: int = 3) -> list[str] | None:
+    """Pure-Python MinHash oracle: per j, the min over the doc's
+    distinct word shingles of md5("j:shingle"); None below shingle_n
+    tokens."""
+    t = re.findall(D.TOKEN_RE, text.lower())
+    shs = {" ".join(t[i : i + shingle_n]) for i in range(len(t) - shingle_n + 1)}
+    if not shs:
+        return None
+    return [
+        min(hashlib.md5(f"{j}:{s}".encode()).hexdigest() for s in shs)
+        for j in range(k)
+    ]
+
+
+def test_minhash_signatures_match_python(docs):
+    """The JVM explode + hash-agg signatures equal the Python oracle."""
     sig_by_doc: dict[int, dict[int, str]] = {}
-    for r in exploded:
+    for r in D.minhash_signatures(docs, k=8).collect():
         sig_by_doc.setdefault(r["doc_id"], {})[r["j"]] = r["h"]
-    udf = D.minhash_signature_udf(k=8)
-    fast = {r["doc_id"]: r["sig"] for r in docs.select("doc_id", udf("text").alias("sig")).collect()}
-    for doc_id, sig in fast.items():
-        if sig is None:
+    for doc_id, text in DOCS:
+        want = _py_minhash(text, k=8)
+        if want is None:
             assert doc_id not in sig_by_doc  # too short for shingles
         else:
-            assert sig == [sig_by_doc[doc_id][j] for j in range(8)]
+            assert [sig_by_doc[doc_id][j] for j in range(8)] == want
 
 
 def test_minhash_lsh_finds_dups(docs):
@@ -59,16 +71,20 @@ def test_minhash_lsh_finds_dups(docs):
     assert all(3 not in p for p in pairs)  # unrelated doc never pairs
 
 
-def test_minhash_lsh_banded_parity_udf_vs_explode(docs):
-    """The UDF-signature path (scale shape: n_docs × bands shuffle) and
-    the explode+hash-agg path must produce the IDENTICAL banded pair
-    set — parity at the operator output, not just the signatures."""
-    slow = {(r["doc_a"], r["doc_b"])
-            for r in D.minhash_lsh_pairs(docs, k=8, bands=4).collect()}
-    fast = {(r["doc_a"], r["doc_b"])
-            for r in D.minhash_lsh_pairs(
-                docs, k=8, bands=4, use_udf_signatures=True).collect()}
-    assert slow == fast and slow  # identical and non-empty
+def test_minhash_lsh_pairs_match_python_banding(docs):
+    """Parity at the operator output, not just the signatures: the
+    banded pair set equals banding the Python oracle signatures (md5 of
+    the '|'-joined band slice, pairs colliding in any band)."""
+    got = {(r["doc_a"], r["doc_b"])
+           for r in D.minhash_lsh_pairs(docs, k=8, bands=4).collect()}
+    bands: dict[tuple[int, str], list[int]] = {}
+    for doc_id, text in DOCS:
+        sig = _py_minhash(text, k=8)
+        for b in range(4) if sig else ():
+            h = hashlib.md5("|".join(sig[2 * b : 2 * b + 2]).encode()).hexdigest()
+            bands.setdefault((b, h), []).append(doc_id)
+    want = {(a, b) for ids in bands.values() for a in ids for b in ids if a < b}
+    assert got == want and got  # identical and non-empty
 
 
 def test_ngram_jaccard(docs):

@@ -7,6 +7,7 @@ follows the reference's pipeline-replay compare
 (/root/reference/transformers/tests/test_audio_split_consolidate.py:67-113)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -462,6 +463,84 @@ def test_commit_fence_rejects_racing_writer(spark, tmpdir_path):
     c["snapshot_id"] = 0  # already committed by create()
     with pytest.raises(RuntimeError, match="already committed"):
         t._write_commit(c)
+
+
+def test_losing_writer_raises_and_winner_survives(spark, tmpdir_path, monkeypatch):
+    """Two writers plan snapshot 1 off the same head, and A publishes
+    while B is between planning and its own publish. B must fail
+    loudly; A's commit must stay the head, untouched."""
+    a = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    b = LakeTable.load(spark, tmpdir_path)
+    encode = b._encode_manifest
+
+    def a_publishes_first(commit):
+        a.alter_add_column("from_a", "string")
+        return encode(commit)
+
+    monkeypatch.setattr(b, "_encode_manifest", a_publishes_first)
+    with pytest.raises(RuntimeError, match="already committed"):
+        b.alter_add_column("from_b", "string")
+    fresh = LakeTable.load(spark, tmpdir_path)
+    assert fresh.current_snapshot_id() == 1
+    assert fresh.commit()["operation"] == "add_column:from_a"
+    assert [c["name"] for c in fresh.schema_cols()] == [n for n, _ in SCHEMA] + ["from_a"]
+    # the loser leaves no temp file behind
+    commits = os.listdir(os.path.join(tmpdir_path, "_commits"))
+    assert not [f for f in commits if f.startswith(".tmp-")]
+
+
+def _state_table(spark, path):
+    """A table whose state fields all differ from the defaults: a
+    non-default max_file_rows, a tombstone, a DDL fence, two batches
+    and an advanced event-time high-water mark. Returns it with the id
+    of the snapshot after the first batch (the rollback target)."""
+    t = LakeTable.create(spark, path, SCHEMA, n_buckets=4, max_file_rows=1000)
+    t.merge(ev(spark, [(1, "I", "u1", T(1), "a"), (2, "I", "u2", T(1), "b"),
+                       (3, "D", "u3", T(1), None)]), "b1")
+    target = t.current_snapshot_id()
+    t.alter_add_column("extra", "string", fence_id=7)
+    t.merge(ev(spark, [(4, "U", "u1", T(5), "a2")]), "b2")
+    return t, target
+
+
+# (op, run, batches the op appends); merges stay below the table's
+# high-water mark, so every state field is expected unchanged
+_CHILD_OPS = [
+    ("schema_change", lambda s, t, tgt: t.alter_add_column("more", "string"), []),
+    ("rollback", lambda s, t, tgt: t.rollback(tgt), []),
+    ("merge_cow", lambda s, t, tgt: t.merge(
+        ev(s, [(5, "U", "u2", T(2), "b2")]), "b3"), ["b3"]),
+    ("merge_mor", lambda s, t, tgt: t.merge(
+        ev(s, [(5, "U", "u2", T(2), "b2")]), "b3", mode="mor"), ["b3"]),
+    ("gc_tombstones", lambda s, t, tgt: t.gc_tombstones(T(100)), []),
+    ("compact", lambda s, t, tgt: t.compact(), []),
+    ("rebucket", lambda s, t, tgt: t.rebucket(8), []),
+]
+
+
+@pytest.mark.parametrize(
+    "run,appended", [(r, a) for _, r, a in _CHILD_OPS],
+    ids=[name for name, _, _ in _CHILD_OPS],
+)
+def test_child_snapshot_links_parent_and_carries_state(
+    spark, tmpdir_path, run, appended
+):
+    """Every snapshot-producing op builds a true child of the head: it
+    links the head as parent, gets its own (later) commit time, and
+    carries batches / hwm_us / applied_fences / max_file_rows — from
+    the rollback target for a rollback."""
+    t, target = _state_table(spark, tmpdir_path)
+    head = dict(t.commit())
+    run(spark, t, target)
+    child = t.commit()
+    base = t.commit(target) if child["operation"].startswith("rollback") else head
+    assert child["snapshot_id"] == head["snapshot_id"] + 1
+    assert child["parent"] == head["snapshot_id"]
+    assert child["committed_at"] > head["committed_at"]
+    assert child["batches"] == base["batches"] + appended
+    for k in ("hwm_us", "applied_fences", "max_file_rows"):
+        assert child[k] == base[k], k
+    assert child["max_file_rows"] == 1000
 
 
 def test_widen_column_metadata_only(spark, tmpdir_path):
