@@ -60,6 +60,8 @@ see a complete snapshot because the manifest is the commit point.
 from __future__ import annotations
 
 import contextlib
+import copy
+import functools
 import json
 import os
 import time
@@ -120,6 +122,23 @@ def write_json_atomic(path: str, obj, replace: bool = True) -> None:
         # gone after a replace; the link's source, or a failed write
         with contextlib.suppress(FileNotFoundError):
             os.unlink(tmp)
+
+
+def _ddl(cols: list[dict]) -> str:
+    """Spark DDL column list of a schema version's columns."""
+    return ", ".join(f"`{c['name']}` {c['type']}" for c in cols)
+
+
+@functools.lru_cache(maxsize=64)
+def _arrow_schema(ddl: str):
+    """(Spark ``StructType``, Arrow schema) of a DDL column list. Cached
+    per DDL string: the parse is a JVM round trip, and a point lookup
+    needs the schema on every call."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
 
 
 @dataclass
@@ -409,7 +428,22 @@ class LakeTable:
         return c["schemas"][v]
 
     def spark_schema_ddl(self) -> str:
-        return ", ".join(f"{c['name']} {c['type']}" for c in self.schema_cols())
+        return _ddl(self.schema_cols())
+
+    def _local_df(self, ddl: str, rows=None) -> DataFrame:
+        """DataFrame of schema ``ddl`` over the driver-side Arrow table
+        ``rows`` (cast to it), or an empty one. Collecting it starts no
+        Spark job: Arrow batches become a local relation, while an
+        empty Python list passed to ``createDataFrame`` is parallelized,
+        and collecting that runs a job whose Python-worker task costs
+        about 100 ms before its first row (4-core host)."""
+        struct, schema = _arrow_schema(ddl)
+        # a copy: the frame hands its StructType to callers, and a
+        # StructType is mutable (``add``) while the cached one is shared
+        return self.spark.createDataFrame(
+            schema.empty_table() if rows is None else rows,
+            copy.deepcopy(struct),
+        )
 
     def alter_add_column(
         self, name: str, col_type: str, fence_id: int | None = None
@@ -636,9 +670,9 @@ class LakeTable:
             # skips parquet schema inference (a driver-side footer
             # read per read call; the merge path builds one of these
             # per batch, so the saved latency is per-commit)
-            ddl = ", ".join(
-                f"`{col['name']}` {col['type']}" for col in c["schemas"][ver]
-            ) + f", `{_SEQ}` bigint, `{_DELETED}` boolean"
+            ddl = _ddl(c["schemas"][ver]) + (
+                f", `{_SEQ}` bigint, `{_DELETED}` boolean"
+            )
             df = self.spark.read.schema(ddl).parquet(*paths)
             sel = []
             for col in cur_cols:
@@ -658,12 +692,12 @@ class LakeTable:
             parts.append(df.select(*sel))
 
         if not parts:
-            ddl = self.spark_schema_ddl() + ", " + ", ".join(
-                f"{n} {t}" for n, t in internal
+            ddl = _ddl(cur_cols) + "".join(
+                f", `{n}` {t}" for n, t in internal
             )
             if with_fileseq:
-                ddl += f", {_FILESEQ} bigint"
-            return self.spark.createDataFrame([], ddl)
+                ddl += f", `{_FILESEQ}` bigint"
+            return self._local_df(ddl)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -866,77 +900,68 @@ class LakeTable:
             out = self._entries_df(c, hits).filter(F.col(c["key"]) == key_value)
         return out.filter(~F.col(_DELETED)).drop(_SEQ, _DELETED)
 
-    # point reads touch 1-2 small bucket files after pruning; a Spark
-    # scan job costs seconds of fixed overhead at any cluster size,
-    # while a driver-side pyarrow read of the same files is
-    # milliseconds. Above this file count, fall back to the scan.
+    # point reads touch a few small bucket files after pruning (base
+    # files plus the bucket's deltas). On a 4-core host, warm, a Spark
+    # scan of them takes 110-135 ms and 2 jobs per lookup; the
+    # driver-side Arrow read below takes 10-18 ms and no job, hit or
+    # miss. Above this file count, fall back to the scan.
     LOOKUP_DRIVER_MAX_FILES = 16
 
     def _lookup_driver_side(
         self, c: dict, hits: list[dict], key_value, resolve: bool = False
-    ):
-        """Serve the point read without a Spark job: pyarrow-read the
-        (manifest-pruned, ≤LOOKUP_DRIVER_MAX_FILES) covering files on
-        the driver with the key predicate pushed to row-group stats,
-        apply the same schema-version column-id mapping as
-        _entries_df, and return the rows as a literal DataFrame.
-        Same output as the scan path (hash-checked by the
-        cdc_point_lookup gate); only the physical strategy differs.
+    ) -> DataFrame:
+        """Serve the point read without a Spark job, in Arrow end to
+        end: read the (manifest-pruned, ≤LOOKUP_DRIVER_MAX_FILES)
+        covering files on the driver with the key predicate pushed to
+        row-group stats, map each column by id into the schema of ``c``
+        (the commit the files were pruned against) with the same
+        null-fill and widening casts as ``_entries_df``, and return the
+        rows as a local DataFrame — an empty one for an absent or
+        tombstoned key. Same output as the scan path (hash-checked by
+        the cdc_point_lookup gate); only the physical strategy differs.
 
         ``resolve`` (merge-on-read): tombstones are read rather than
-        filtered, and the single winner is picked driver-side by max
-        (order_col, _seq, file seq) — the same rule as
-        ``_resolve_lww`` — then dropped if it is a tombstone."""
-        import pandas as pd
+        filtered, and the single winner is picked by max (order_col,
+        _seq, file seq) — the same rule as ``_resolve_lww`` — then
+        dropped if it is a tombstone."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         cur_cols = self.schema_cols(c)
         key_id = next(x["id"] for x in cur_cols if x["name"] == c["key"])
-        order_name = c["order_col"]
-        frames: list[tuple[pd.DataFrame, int]] = []
+        ddl = _ddl(cur_cols)
+        out_schema = _arrow_schema(ddl)[1]
+        schema = pa.schema([
+            *out_schema, (_SEQ, pa.int64()), (_DELETED, pa.bool_()),
+            (_FILESEQ, pa.int64()),
+        ])
+        parts = []
         for f in hits:
             old_cols = {x["id"]: x for x in c["schemas"][f["schema_version"]]}
             if key_id not in old_cols:
                 continue  # file predates the key column: cannot match
-            phys_key = old_cols[key_id]["name"]
-            flt = [(phys_key, "==", key_value)]
+            flt = [(old_cols[key_id]["name"], "==", key_value)]
             if not resolve:
                 flt.append((_DELETED, "==", False))
             t = pq.read_table(os.path.join(self.path, f["path"]), filters=flt)
-            if t.num_rows == 0:
+            n = t.num_rows
+            if n == 0:
                 continue
-            pdf = t.to_pandas()
-            out = {}
-            for col in cur_cols:
-                if col["id"] in old_cols:
-                    out[col["name"]] = pdf[old_cols[col["id"]]["name"]]
-                else:
-                    out[col["name"]] = pd.Series(
-                        [None] * len(pdf), dtype="object"
-                    )
-            if resolve:
-                out[_SEQ] = pdf[_SEQ]
-                out[_DELETED] = pdf[_DELETED]
-            frames.append((pd.DataFrame(out), int(f.get("seq", 0))))
-        ddl = self.spark_schema_ddl()
-        if not frames:
-            return self.spark.createDataFrame([], ddl)
-        if resolve:
-            rows = []
-            for pdf, fileseq in frames:
-                for _, r in pdf.iterrows():
-                    rows.append((r[order_name], int(r[_SEQ]), fileseq, r))
-            rows.sort(key=lambda x: (x[0], x[1], x[2]))
-            winner = rows[-1][3]
-            if bool(winner[_DELETED]):
-                return self.spark.createDataFrame([], ddl)
-            one = winner.drop(labels=[_SEQ, _DELETED]).to_frame().T
-            return self.spark.createDataFrame(
-                one.reset_index(drop=True), schema=ddl
-            )
-        return self.spark.createDataFrame(
-            pd.concat([p for p, _ in frames], ignore_index=True), schema=ddl
-        )
+            cols = [
+                t[old_cols[x["id"]]["name"]] if x["id"] in old_cols
+                else pa.nulls(n)
+                for x in cur_cols
+            ] + [t[_SEQ], t[_DELETED], pa.array([int(f.get("seq", 0))] * n)]
+            parts.append(pa.table(cols, names=schema.names).cast(schema))
+        rows = pa.concat_tables(parts) if parts else schema.empty_table()
+        if resolve and rows.num_rows:
+            # nulls sort last, as Spark's max ranks them lowest
+            rows = rows.sort_by(
+                [(k, "descending") for k in (c["order_col"], _SEQ, _FILESEQ)]
+            ).slice(0, 1)
+        rows = rows.filter(pc.invert(rows[_DELETED]))
+        return self._local_df(ddl, rows.select(out_schema.names))
 
     # ------------------------------------------------------------------
     # snapshot tags (named refs — Iceberg's tags; the dataset-release
@@ -1145,10 +1170,14 @@ class LakeTable:
         ``post_dedup_transform`` (df -> df, row-wise deterministic) is
         applied AFTER the batch-local LWW — the expensive extraction
         UDFs (html→text/lang) run once per *winning* key instead of
-        once per event, and on post-shuffle partitions (cores-wide)
-        instead of input splits. For an update-heavy feed this cuts
-        Python-UDF work by the dup factor and fixes the few-input-
-        splits parallelism cliff.
+        once per event. For an update-heavy feed this cuts Python-UDF
+        work by the dup factor. It runs on the post-shuffle partitions
+        of the winners, which AQE coalesces: at 15k events per batch
+        (perfbench ``ingest_cow``, 4-core host) the ~2 MB winner
+        shuffle becomes ONE partition, so the UDF is one task of about
+        190 ms inside a ~970 ms trigger. That is the faster shape here:
+        forcing 16 partitions grew the stage from ~190 to ~570 ms,
+        because every Python-worker task pays a fixed start cost.
 
         ``bounded_lateness_us``: OBSERVABLE bounded-lateness policy
         (the streaming analog of Spark's watermark drop, but with the
@@ -1481,7 +1510,7 @@ class LakeTable:
         if not os.path.isdir(p) or not any(
             s.startswith("batch=") for s in os.listdir(p)
         ):
-            return self.spark.createDataFrame([], "batch string")
+            return self._local_df("batch string")
         # batches quarantined before and after a schema evolution of
         # the FEED may differ in columns — union them, null-padded
         return (
@@ -1502,8 +1531,9 @@ class LakeTable:
             col["name"] for col in cur_cols if col["name"] not in (key, order_col)
         ]
 
-        # 3b. payload transform on winners only (one UDF pass,
-        #     post-shuffle partitioning = cores-wide)
+        # 3b. payload transform on winners only (one UDF pass on the
+        #     post-shuffle partitions; AQE coalesces a small winner set
+        #     to one task — see merge())
         ev = post_dedup_transform(winners) if post_dedup_transform else winners
         ptypes = {x["name"]: x["type"] for x in cur_cols}
         for p in payload_names:
@@ -2432,8 +2462,7 @@ class LakeTable:
     def lineage(self) -> DataFrame:
         p = os.path.join(self.path, _LINEAGE)
         if not os.path.isdir(p):
-            return self.spark.createDataFrame(
-                [],
+            return self._local_df(
                 "batch_id string, snapshot_id bigint, source_part int, "
                 "min_offset bigint, max_offset bigint, events bigint, "
                 "inserts bigint, updates bigint, deletes bigint, "

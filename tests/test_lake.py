@@ -235,6 +235,26 @@ def test_lookup_bucket_parity_with_writer(spark, tbl):
         assert len(got) == 1 and got[0].text == f"t{i}", url
 
 
+def test_empty_frames_start_no_spark_job(tbl, count_jobs):
+    """A fresh table's read(), quarantine() and lineage() are local
+    empty frames with their usual schemas: collecting them starts no
+    Spark job."""
+    frames = {"read": tbl.read(), "quarantine": tbl.quarantine(),
+              "lineage": tbl.lineage()}
+    assert {k: df.columns for k, df in frames.items()} == {
+        "read": ["url", "warc_ts", "text"],
+        "quarantine": ["batch"],
+        "lineage": [
+            "batch_id", "snapshot_id", "source_part", "min_offset",
+            "max_offset", "events", "inserts", "updates", "deletes",
+            "stale_noops", "malformed", "upserts", "tombstones",
+        ],
+    }
+    assert {k: count_jobs(df.collect) for k, df in frames.items()} == {
+        k: ([], 0) for k in frames
+    }
+
+
 def test_history_metadata_table(spark, tbl):
     tbl.merge(ev(spark, [(1, "I", "u1", T(1), "a")]), "b1")
     tbl.merge(ev(spark, [(2, "U", "u1", T(2), "b")]), "b2")

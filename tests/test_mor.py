@@ -106,6 +106,92 @@ def test_lookup_spark_fallback_resolves(spark, tmpdir_path):
         LakeTable.LOOKUP_DRIVER_MAX_FILES = old
 
 
+def test_lookup_starts_no_spark_job(spark, tmpdir_path, count_jobs):
+    """The driver-side lookup answers every outcome without a Spark
+    job: hits, misses and tombstones alike."""
+    cow, mor = _pair(spark, tmpdir_path)
+    got = {}
+    for name, table, key in (
+        ("cow hit", cow, "u1"),
+        ("mor resolved hit", mor, "u1"),
+        ("absent key", mor, "absent"),
+        ("cow tombstone", cow, "u3"),
+        # u3's base row survives on disk, shadowed by a delta tombstone
+        ("mor delta tombstone", mor, "u3"),
+    ):
+        rows, jobs = count_jobs(table.lookup(key).collect)
+        got[name] = ([r.text for r in rows], jobs)
+    assert got == {
+        "cow hit": (["a2"], 0),
+        "mor resolved hit": (["a2"], 0),
+        "absent key": ([], 0),
+        "cow tombstone": ([], 0),
+        "mor delta tombstone": ([], 0),
+    }
+
+
+EVO_DDL = "event_id bigint, op string, url string, warc_ts timestamp, text string, n int"
+
+
+def Tus(s):
+    return T(s) + dt.timedelta(microseconds=123_457)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_lookup_driver_matches_scan_under_schema_evolution(
+    spark, tmpdir_path, monkeypatch, mode
+):
+    """Driver-side and scan-path lookups agree, schema and rows, over
+    files written before and after add/rename/widen DDL — with the
+    timestamp compared as unix micros, and an exact (order_col, _seq)
+    tie between two files that the later file seq must win."""
+    t = LakeTable.create(
+        spark, tmpdir_path, SCHEMA + [("n", "int")], n_buckets=2
+    )
+    base = [(1, "I", "u1", Tus(1), "a", 1), (2, "I", "u2", Tus(1), "b", 2),
+            (3, "I", "u3", Tus(1), "c", 3), (4, "I", "u4", Tus(1), "d", 4)]
+    t.merge(spark.createDataFrame(base, EVO_DDL), "b0", mode=mode)
+    t.alter_widen_column("n", "bigint")
+    t.alter_rename_column("text", "body")
+    t.alter_add_column("lang", "string")
+    ddl = ("event_id bigint, op string, url string, warc_ts timestamp, "
+           "body string, n bigint, lang string")
+    t.merge(spark.createDataFrame(
+        [(5, "U", "u1", Tus(2), "a2", 2**40, "en"),
+         (6, "D", "u4", Tus(2), None, None, None),
+         (7, "U", "u3", Tus(3), "tie-first", 30, "de")], ddl), "b1", mode=mode)
+    # the same event again under a new batch id: (warc_ts, _seq) tie
+    t.merge(spark.createDataFrame(
+        [(7, "U", "u3", Tus(3), "tie-second", 31, "fr")], ddl), "b2", mode=mode)
+
+    def look(key):
+        df = t.lookup(key)
+        out = df.select(
+            "url", F.unix_micros("warc_ts").alias("ts_us"), "body", "n", "lang"
+        )
+        return [(f.name, f.dataType) for f in df.schema], sorted(
+            tuple(r) for r in out.collect()
+        )
+
+    keys = ("u1", "u2", "u3", "u4", "absent")
+    driver = {k: look(k) for k in keys}
+    monkeypatch.setattr(LakeTable, "LOOKUP_DRIVER_MAX_FILES", 0)
+    scan = {k: look(k) for k in keys}
+    assert driver == scan
+    us = LakeTable._order_micros
+    assert {k: rows for k, (_, rows) in driver.items()} == {
+        "u1": [("u1", us(Tus(2)), "a2", 2**40, "en")],
+        "u2": [("u2", us(Tus(1)), "b", 2, None)],  # pre-DDL file
+        "u3": [("u3", us(Tus(3)), "tie-second", 31, "fr")],
+        "u4": [],
+        "absent": [],
+    }
+    assert [n for n, _ in driver["u2"][0]] == [
+        "url", "warc_ts", "body", "n", "lang"
+    ]
+    assert str(dict(driver["u2"][0])["n"]) == "LongType()"
+
+
 def test_compact_folds_deltas(spark, tmpdir_path):
     cow, mor = _pair(spark, tmpdir_path)
     before = rows_of(mor)
